@@ -3951,7 +3951,11 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ev = None
     try:
-        from columnar_spark.stats import row_count_from_sidecar, table_signature
+        from columnar_spark.stats import (
+            index_is_fresh,
+            row_count_from_sidecar,
+            table_signature,
+        )
         from columnar_spark.streaming.rollup import load_rollup_sidecar
 
         tbl = f"{sf_dir}/events.parquet"
@@ -3989,7 +3993,11 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
             fresh = _ROLLUP_GATE_CACHE.get(gkey)
             if fresh is None:
                 fresh = False
-                if dict(rsig)["max_mtime_ms"] >= dict(tsig)["max_mtime_ms"]:
+                # the _table_sig.json gate (_rollup_sig_fresh's check)
+                # also catches COUNT-PRESERVING rewrites of events
+                if dict(rsig)["max_mtime_ms"] >= dict(tsig)["max_mtime_ms"] and (
+                    index_is_fresh(tbl, roll_dir)
+                ):
                     total = partials.agg(F.sum("cnt")).first()[0] or 0
                     row_count = row_count_from_sidecar(tbl)
                     fresh = row_count is not None and total == row_count

@@ -580,6 +580,9 @@ public class CountRewriteRule extends Rule<LogicalPlan> {
         // newest-file mtime and forces a recheck)
         File statsDir = new File(tablePath + ".stats");
         if (!statsDir.isDirectory()) return null;
+        // the recorded table signature catches COUNT-PRESERVING
+        // rewrites the sum(cnt) == row_count check cannot see
+        if (!indexFresh(tablePath, root)) return null;
         if (!rollupFresh(tablePath, statsDir, parts)) return null;
 
         // merge-on-read, then project the requested outputs in order

@@ -230,17 +230,46 @@ def data_files(root: str) -> "list[str]":
     return sorted(glob.glob(os.path.join(root, "*.parquet")))
 
 
+# Footer key under which Spark's parquet writer records the row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(root: str):
+    """The Spark schema recorded in the footer of the artifact's first
+    data file, read with pyarrow — the schema spark.read.parquet infers
+    with mergeSchema off (one file; the files of an artifact share one
+    schema), without the Spark job that inference runs. None for remote
+    roots, empty artifacts, or files Spark did not write."""
+    if "://" in root:
+        return None
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    files = data_files(root)
+    if not files:
+        return None
+    try:  # unreadable footer or schema: fall back to inference
+        raw = (pq.read_schema(files[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        return StructType.fromJson(json.loads(raw)) if raw else None
+    except (OSError, ValueError, KeyError):
+        return None
+
+
 def read_df(spark: SparkSession, root: str) -> DataFrame:
     """The artifact as a DataFrame: manifest-resolved segment list when
     present (uncommitted uploads invisible), plain directory read
-    otherwise."""
+    otherwise. The schema comes from a data file's footer
+    (footer_schema), sparing the schema-inference job; Spark infers it
+    only where the footer cannot say."""
     _transport(root)  # loud refusal before Spark touches a real store
+    schema = footer_schema(root)
+    reader = spark.read if schema is None else spark.read.schema(schema)
     files = live_files(root)
     if files is None:
-        return spark.read.parquet(root)
+        return reader.parquet(root)
     if not files:
         raise ValueError(f"object-store artifact at {root} has an empty live set")
-    return spark.read.parquet(*[os.path.join(root, f) for f in files])
+    return reader.parquet(*[os.path.join(root, f) for f in files])
 
 
 def vacuum_artifact(

@@ -37,15 +37,21 @@ Batch append algebra (exact, proven by test_cohort_sidecar fuzz):
   user_min gets the batch mins appended (MIN-merge keeps the lower).
 
 Scale posture: per batch one anti-join against pairs (bucketable on
-user at real scale), one merge of user_min (O(users) — dim-sized), and
-correction reads touch only the MOVED users' pairs. The query itself
-never joins and never sees the event log. Reference analog: E6/E7's
-answer-from-the-index COUNT regime (secondary/secondary.cpp:531-551)
-for the one shape the associative rollup (streaming/rollup.py) cannot
-express."""
+user at real scale), one merge of user_min (O(users) — dim-sized) into
+a per-user classification that is staged once, and correction reads
+that touch only the MOVED users' pairs — planned only when some user
+moved, so a batch that moves nobody reads pairs/ once. Each staged
+component is one file (bounded by REBUILD_CUTOFF), its row count comes
+from the parquet footer, and on POSIX the sidecar appends are renames
+of the staged files: a fold adds one file per component, not one per
+shuffle partition. The query itself never joins and never sees the
+event log. Reference analog: E6/E7's answer-from-the-index COUNT
+regime (secondary/secondary.cpp:531-551) for the one shape the
+associative rollup (streaming/rollup.py) cannot express."""
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -154,16 +160,46 @@ def cohort_meta(table_path: str) -> dict | None:
     return objstore.read_json(cohort_sidecar_path(table_path), "meta.json")
 
 
+def _stage(df: DataFrame, path: str) -> DataFrame:
+    """Materialize one staged component as a single parquet file and
+    return a reader of it. The staged frames are bounded by
+    REBUILD_CUTOFF (or by the batch), so one file is the right size for
+    them; the reader takes the known schema, so it costs no
+    schema-inference job. A frame whose last operator joins an
+    UNBOUNDED side (pairs/, user_min/) arrives repartition(1)-ed, so the
+    coalesce does not pull that join into a single task."""
+    df.coalesce(1).write.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def _staged_rows(path: str) -> int:
+    """Row count of a staged component from its parquet footers — the
+    staging dir is on a local filesystem, so this is metadata only, no
+    Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+
+
 def _append_component(
-    spark: SparkSession, df: DataFrame, table_path: str, root: str, sub: str
+    spark: SparkSession, staged: str, table_path: str, root: str, sub: str
 ) -> None:
+    """Append a staged component to the sidecar: on POSIX its one file
+    renames in (no Spark job); object stores publish through the
+    manifest-pointer protocol (objstore.py)."""
     from columnar_spark import objstore
 
     target = os.path.join(root, sub)
     if objstore.is_object_store(table_path):
-        objstore.write_df(spark, df, target, mode="append")
-    else:
-        df.write.mode("append").parquet(target)
+        objstore.write_df(spark, spark.read.parquet(staged), target, mode="append")
+        return
+    for name in os.listdir(staged):
+        if name.endswith(".parquet"):
+            os.replace(os.path.join(staged, name), os.path.join(target, name))
 
 
 def append_cohort_batch(
@@ -177,17 +213,23 @@ def append_cohort_batch(
     anti-join and the user_min merge read the existing sidecar (the
     merge_value_index maintenance posture, E9).
 
-    Staging discipline (r10): every frame whose plan READS the sidecar
-    (new_pairs, the correction delta) is materialized to a TEMP parquet
-    dir before anything appends to the paths those plans read — the
-    executor-side twin of the old collect-before-overwrite rule, with
-    no driver-memory spike (the r9 verdict's 2M-row driver collect is
-    gone). Both the new-pair count AND the staged correction volume
-    take the full-rebuild exit past REBUILD_CUTOFF — a moved-user
-    correction can dwarf the batch (r9 advice), and past that size the
-    rebuild is the cheaper plan anyway. `pre_sig` (the events table's
-    pre-append signature from the ingest fold) rebuilds instead of
-    masking an out-of-band rewrite."""
+    Staging discipline: every frame whose plan READS the sidecar
+    (new_pairs, the per-user classification, the matrix delta) is
+    materialized to a staging parquet file before anything appends to
+    the paths those plans read — the executor-side twin of the old
+    collect-before-overwrite rule, with nothing collected into the
+    calling process. Each staged component is ONE file, and the sidecar
+    appends are renames of those files. The classification (batch-min day vs the user's
+    current cohort) is staged once, split by whether the user's cohort
+    moved, and the correction branches are planned only when the moved
+    split is non-empty — so a batch that moves nobody never reads
+    `pairs/` beyond the anti-join. Staged row counts come from the
+    parquet footers, not from count() jobs. Both the new-pair count AND
+    the staged correction volume take the full-rebuild exit past
+    REBUILD_CUTOFF — a moved-user correction can dwarf the batch, and
+    past that size the rebuild is the cheaper plan anyway. `pre_sig`
+    (the events table's pre-append signature from the ingest fold)
+    rebuilds instead of masking an out-of-band rewrite."""
     import tempfile
 
     from columnar_spark import objstore
@@ -204,72 +246,89 @@ def append_cohort_batch(
             write_cohort_sidecar(spark, table_path, meta["ts_col"], meta["user_col"])
             return
     pairs_cur = objstore.read_df(spark, os.path.join(root, "pairs"))
-    um = (
-        objstore.read_df(spark, os.path.join(root, "user_min"))
-        .groupBy("user_id")
-        .agg(F.min("day0").alias("day0"))
-    )
     bp = pairs_from_events(batch, meta["ts_col"], meta["user_col"]).distinct()
-    stage = tempfile.mkdtemp(prefix="cohort-stage-")
+    # staged beside the sidecar, on its filesystem, because the appends
+    # are renames; an object-store sidecar stages locally and publishes
+    # through objstore.write_df
+    stage = tempfile.mkdtemp(
+        prefix=os.path.basename(root) + ".stage-",
+        dir=None if objstore.is_object_store(table_path)
+        else os.path.dirname(os.path.abspath(root)),
+    )
     try:
-        bp.join(pairs_cur, ["user_id", "day"], "left_anti").write.parquet(
-            os.path.join(stage, "new_pairs")
+
+        def sp(name: str) -> str:
+            return os.path.join(stage, name)
+
+        new_pairs = _stage(
+            bp.join(pairs_cur, ["user_id", "day"], "left_anti").repartition(1),
+            sp("new_pairs"),
         )
-        new_pairs = spark.read.parquet(os.path.join(stage, "new_pairs"))
-        n_new = new_pairs.count()
+        n_new = _staged_rows(sp("new_pairs"))
         if n_new > REBUILD_CUTOFF:
             write_cohort_sidecar(spark, table_path, meta["ts_col"], meta["user_col"])
             return
         if n_new == 0:
             _write_sig(table_path)
             return
+        um = (
+            objstore.read_df(spark, os.path.join(root, "user_min"))
+            .groupBy("user_id")
+            .agg(F.min("day0").alias("day0"))
+        )
         nu_min = new_pairs.groupBy("user_id").agg(F.min("day").alias("bmin"))
+        # per-user classification, staged once: the batch-min day, the
+        # current cohort (null for a new user), split by whether the
+        # batch moves the user's cohort earlier
         cls = nu_min.join(um, "user_id", "left")
-        moved = cls.filter(F.col("day0").isNotNull() & (F.col("bmin") < F.col("day0")))
-        stable = cls.filter(F.col("day0").isNull() | (F.col("bmin") >= F.col("day0")))
+        cls.withColumn(
+            "moved", F.col("day0").isNotNull() & (F.col("bmin") < F.col("day0"))
+        ).repartition(1).write.partitionBy("moved").parquet(sp("cls"))
+        splits = {
+            moved: spark.read.schema(cls.schema).parquet(d)
+            for moved, d in ((False, sp("cls/moved=false")), (True, sp("cls/moved=true")))
+            if os.path.isdir(d)
+        }
         # cohort assignment for the non-moved users' new pairs
-        plus_stable = (
-            new_pairs.join(
-                stable.select(
-                    "user_id", F.coalesce("day0", "bmin").alias("cohort_day")
-                ),
-                "user_id",
+        parts = []
+        if False in splits:
+            parts.append(
+                new_pairs.join(
+                    splits[False].select(
+                        "user_id", F.coalesce("day0", "bmin").alias("cohort_day")
+                    ),
+                    "user_id",
+                )
+                .groupBy("cohort_day", "day")
+                .agg(F.count(F.lit(1)).alias("cnt"))
             )
-            .groupBy("cohort_day", "day")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # corrections for moved users: retract old cells, re-emit
-        # everything (old + new pairs) under the new cohort
-        moved_keys = moved.select("user_id", "day0", "bmin")
-        old_moved = pairs_cur.join(moved_keys, "user_id")
-        minus_old = (
-            old_moved.groupBy(F.col("day0").alias("cohort_day"), "day")
-            .agg((-F.count(F.lit(1))).alias("cnt"))
-        )
-        plus_old_new = (
-            old_moved.select("bmin", "day", "user_id")
-            .unionByName(
-                new_pairs.join(moved_keys, "user_id").select("bmin", "day", "user_id")
+        if True in splits:
+            # corrections for moved users: retract old cells, re-emit
+            # everything (old + new pairs) under the new cohort
+            moved_keys = splits[True]
+            old_moved = pairs_cur.join(moved_keys, "user_id")
+            parts.append(
+                old_moved.groupBy(F.col("day0").alias("cohort_day"), "day")
+                .agg((-F.count(F.lit(1))).alias("cnt"))
             )
-            .groupBy(F.col("bmin").alias("cohort_day"), "day")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        delta = plus_stable.unionByName(minus_old).unionByName(plus_old_new)
-        delta.write.parquet(os.path.join(stage, "delta"))
-        sdelta = spark.read.parquet(os.path.join(stage, "delta"))
-        if sdelta.count() > REBUILD_CUTOFF:
+            parts.append(
+                old_moved.select("bmin", "day", "user_id")
+                .unionByName(
+                    new_pairs.join(moved_keys, "user_id").select("bmin", "day", "user_id")
+                )
+                .groupBy(F.col("bmin").alias("cohort_day"), "day")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+            )
+        _stage(functools.reduce(DataFrame.unionByName, parts), sp("delta"))
+        if _staged_rows(sp("delta")) > REBUILD_CUTOFF:
             write_cohort_sidecar(spark, table_path, meta["ts_col"], meta["user_col"])
             return
+        batch_min = functools.reduce(DataFrame.unionByName, splits.values())
+        _stage(batch_min.select("user_id", F.col("bmin").alias("day0")), sp("user_min"))
         # all reads of the live sidecar are materialized — append freely
-        _append_component(spark, sdelta, table_path, root, "matrix")
-        _append_component(spark, new_pairs, table_path, root, "pairs")
-        _append_component(
-            spark,
-            nu_min.select("user_id", F.col("bmin").alias("day0")),
-            table_path,
-            root,
-            "user_min",
-        )
+        for sub, staged in (("matrix", "delta"), ("pairs", "new_pairs"),
+                            ("user_min", "user_min")):
+            _append_component(spark, sp(staged), table_path, root, sub)
         _write_sig(table_path)
     finally:
         shutil.rmtree(stage, ignore_errors=True)

@@ -186,7 +186,12 @@ def _semantic_report_expr(
     corpus = corpus_emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv")
     ).withColumn("__cn", norm(F.col("__cv")))
-    sim = dot(F.col("__cv"), F.col("__bv")) / (F.col("__cn") * F.col("__bn"))
+    # try_divide: a zero-norm vector scores NULL (never a hit) instead of
+    # raising DIVIDE_BY_ZERO under ANSI — the kernel's 0/0 = NaN, which
+    # `>= threshold` excludes, is the same answer
+    sim = F.try_divide(
+        dot(F.col("__cv"), F.col("__bv")), F.col("__cn") * F.col("__bn")
+    )
     return (
         corpus.crossJoin(bench)
         .select(F.col(id_col), sim.alias("__sim"))
@@ -323,7 +328,10 @@ def semantic_contamination_report(
                         acc += x * y
                     for y in b:
                         bnorm_acc += y * y
-                    s = acc / (vn * bnorm_acc ** 0.5)
+                    den = vn * bnorm_acc ** 0.5
+                    if den == 0.0:
+                        continue  # zero-norm side: NaN, never a hit
+                    s = acc / den
                     if s >= thr:
                         hits += 1
                         mx = s if mx is None or s > mx else mx

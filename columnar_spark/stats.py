@@ -61,6 +61,24 @@ def rewrites_disabled(spark: SparkSession):
             spark.conf.set(REWRITE_ENABLED_KEY, old)
 
 
+def _local_relation(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Local in-memory copy of a small DataFrame as a JVM LocalTableScan.
+
+    `createDataFrame(df.collect())` builds a Python-pickled ExistingRDD
+    that re-crosses the JVM->Python boundary on EVERY execution of every
+    plan that embeds it (~0.3s/exec fixed cost, measured at sf0.1); the
+    Arrow round-trip (DataFrame.toArrow -> createDataFrame(pa.Table))
+    yields a LocalRelation evaluated entirely JVM-side, type-exact for
+    every Spark SQL type Arrow can carry (bigint/NULLs/decimal/date
+    round-trip pinned in tests). Falls back to the row path when Arrow
+    cannot represent the schema."""
+    try:
+        out = spark.createDataFrame(df.toArrow(), schema=df.schema)
+    except Exception:
+        out = spark.createDataFrame(df.collect(), df.schema)
+    return out
+
+
 def build_stats_manifest(df: DataFrame) -> DataFrame:
     """Per-column stats in ONE wide aggregate (single scan):
     (column, min, max, ndv, null_count, row_count) with values as strings
@@ -471,7 +489,8 @@ def merge_sketches(a: DataFrame, b: DataFrame) -> DataFrame:
     one. Numeric min/max compare as doubles (string compare would say
     '9' > '10'); strings/timestamps/dates compare lexicographically,
     which is order-correct for their canonical casts. HLLs union."""
-    u = a.unionByName(b)
+    # n_columns rows per side: one partition, no shuffle before the merge
+    u = a.unionByName(b).coalesce(1)
     merged = u.groupBy("column", "dtype", "is_numeric").agg(
         F.min(F.when(F.col("is_numeric"), F.col("min_s").cast("double"))).alias("_min_n"),
         F.max(F.when(F.col("is_numeric"), F.col("max_s").cast("double"))).alias("_max_n"),
@@ -748,10 +767,14 @@ def merge_value_index(spark: SparkSession, table_path: str, col: str, batch_df: 
         F.sum(measure_col_name(c)).cast("long").alias(measure_col_name(c))
         for c, _dp in measures
     ]
-    merged = existing.unionByName(delta).groupBy("value").agg(*maggs)
-    with rewrites_disabled(spark):  # the batch count must NOT be served
-        rows = merged.collect()     # from the index being merged into
-    out = spark.createDataFrame(rows, merged.schema)
+    # one partition: the merged index is collected in full anyway,
+    # and a single-partition input needs no shuffle before the merge
+    merged = existing.unionByName(delta).coalesce(1).groupBy("value").agg(*maggs)
+    # materialized in memory before the overwrite of the path `merged`
+    # reads; the batch count must NOT be served from the index being
+    # merged into
+    with rewrites_disabled(spark):
+        out = _local_relation(spark, merged)
     from columnar_spark import objstore
 
     _vp = value_index_path(table_path, col)
@@ -948,8 +971,8 @@ def merge_posting_index(
     )
     from columnar_spark import objstore
 
-    rows = merged.collect()  # same small-by-contract bound as the value index
-    out = spark.createDataFrame(rows, merged.schema)
+    # same small-by-contract bound as the value index
+    out = _local_relation(spark, merged)
     p = posting_index_path(table_path, col)
     if objstore.is_object_store(table_path):
         objstore.write_df(spark, out, p, mode="overwrite")

@@ -22,9 +22,27 @@ the one recovery that cannot double-count. The text-index and vocab
 sidecars keep their own applied-batch staging (stage-then-commit) and
 are consistent under either path.
 
+Fold schedule: after the table append, each sidecar family the table
+carries (stats; vector + graph; value + posting indexes; textstats;
+dedupsig; join projections; aggregate projections; cohort) folds the
+batch in through ONE callable, and the callables run concurrently on a
+thread pool in the calling process (`_run_folds`). Their contract: a
+fold writes only its own family's sidecars and reads only base tables,
+the batch and its own sidecars — so no fold can observe another's
+half-written state. The schedule runs under one hoisted
+`rewrites_disabled` (a session-wide conf no thread may flip on its
+own, so other threads' queries on the session also run without the
+sidecar rewrites meanwhile); every fold finishes before the first
+error is re-raised, so nothing writes after the writer lock is
+released, and the ledger keeps its `inflight` marker for the rebuild
+path. The crash-recovery rebuild (`_rebuild_sidecars`) stays serial.
+
 Scale posture: foreachBatch bodies are plain DataFrame jobs (no driver
-loops); state for windowed aggs is bounded by the watermark; the ledger
-is O(#batches) JSON metadata, no data-plane cost.
+loops); small maintenance results (the stats sketch, merged value
+and posting indexes) are collected as JVM-local relations via Arrow,
+never as pickled Python rows; state for windowed aggs is bounded by
+the watermark; the ledger is O(#batches) JSON metadata, no data-plane
+cost.
 """
 
 from __future__ import annotations
@@ -36,13 +54,17 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_spark import objstore
 from columnar_spark.functions import money
 
 from columnar_spark.stats import (
+    _local_relation,
     build_stats_sketch,
     manifest_from_sketch,
     merge_sketches,
+    rewrites_disabled,
     sketch_path,
+    write_stats_sidecar,
 )
 from columnar_spark.writer import WriteSpec, normalize, stats_path
 
@@ -269,12 +291,8 @@ def _rebuild_sidecars(ss: SparkSession, dst_path: str) -> None:
     )
 
     full = ss.read.parquet(dst_path)
-    sk = build_stats_sketch(full)
-    rows = sk.collect()
-    sdf = ss.createDataFrame(rows, sk.schema)
+    sdf = _local_relation(ss, build_stats_sketch(full))
     sdf.coalesce(1).write.mode("overwrite").parquet(sketch_path(dst_path))
-    from columnar_spark.stats import write_stats_sidecar
-
     write_stats_sidecar(ss, manifest_from_sketch(sdf).coalesce(1), dst_path)
     for c in persisted_value_index_cols(dst_path):
         jm = json_index_meta(dst_path, c)
@@ -383,6 +401,220 @@ def _rebuild_sidecars(ss: SparkSession, dst_path: str) -> None:
             )
 
 
+# ------------------------------------------------ incremental sidecar folds
+# One per sidecar family, all called as (ss, dst_path, appended, pre_sig)
+# under the contract in the module docstring ("Fold schedule"). A fold
+# whose family the table does not carry returns at once.
+
+
+def _fold_stats(ss, dst_path, appended, pre_sig):
+    """Stats sketch + manifest: merge in the batch's contribution
+    (O(batch), mergeable HLL + associative min/max/counts)."""
+    sp = sketch_path(dst_path)
+    if os.path.isdir(sp):
+        merged = merge_sketches(
+            objstore.read_df(ss, sp),
+            build_stats_sketch(appended),
+        )
+    else:
+        # first sidecar for this table: the table may have pre-existing
+        # rows the batch sketch wouldn't cover — bootstrap from the full
+        # post-append table (one-time O(table); every later append merges
+        # O(batch)). For a brand-new table this reads exactly the batch.
+        merged = build_stats_sketch(ss.read.parquet(dst_path))
+    # materialize before overwriting the path the plan reads from
+    merged_df = _local_relation(ss, merged)
+    merged_df.coalesce(1).write.mode("overwrite").parquet(sp)
+    write_stats_sidecar(ss, manifest_from_sketch(merged_df).coalesce(1), dst_path)
+
+
+def _fold_vectors(ss, dst_path, appended, pre_sig):
+    """IVF-PQ and HNSW graph sidecars. The batch encodes with the
+    EXISTING centroids/codebooks and its codes append — rebuild happens
+    at compaction, like the reference's segment rebuilds; touched
+    sub-graphs extend with deterministic level sampling (replay-safe)
+    and untouched parts are not read or written."""
+    from columnar_spark.operators.hnsw_index import (
+        append_to_graph_index,
+        graph_index_dirs,
+        load_graph_index_meta,
+    )
+    from columnar_spark.operators.knn_index import (
+        _load_vector_index_dir,
+        append_to_vector_index,
+        vector_index_dirs,
+    )
+
+    # check_fresh=False: the table append legitimately moved the
+    # signature ahead of the sidecar's recorded one. Every per-attribute
+    # artifact (root + col=*) absorbs the batch.
+    for vdir in vector_index_dirs(dst_path):
+        vidx = _load_vector_index_dir(dst_path, vdir, check_fresh=False)
+        if vidx is not None and vidx.vec_col in appended.columns:
+            append_to_vector_index(ss, appended, dst_path, vec_col=vidx.vec_col)
+    for gdir in graph_index_dirs(dst_path):
+        gmeta = load_graph_index_meta(dst_path, check_fresh=False, index_path=gdir)
+        if gmeta is not None and gmeta["vec_col"] in appended.columns:
+            append_to_graph_index(ss, appended, dst_path, index_path=gdir)
+
+
+def _fold_value_indexes(ss, dst_path, appended, pre_sig):
+    """Persisted value-index (A11) and posting-index sidecars: fold the
+    batch's value counts / postings in — O(index + batch-ndv)."""
+    from columnar_spark.stats import (
+        composite_index_cols,
+        json_index_meta,
+        merge_posting_index,
+        merge_value_index,
+        persisted_posting_index_cols,
+        persisted_value_index_cols,
+        posting_index_id_col,
+    )
+
+    cols = set(appended.columns)
+    for c in persisted_value_index_cols(dst_path):
+        jmeta = json_index_meta(dst_path, c)
+        cmeta = composite_index_cols(dst_path, c)
+        if (
+            c in cols
+            or (jmeta is not None and jmeta["parent"] in cols)
+            or (cmeta is not None and all(x in cols for x in cmeta))
+        ):
+            # JSON field / composite indexes merge from their source
+            # columns (the virtual key is computed inside merge_value_index)
+            merge_value_index(ss, dst_path, c, appended)
+    for c in persisted_posting_index_cols(dst_path):
+        idc = posting_index_id_col(dst_path, c)
+        if c in cols and idc and idc in cols:
+            merge_posting_index(ss, dst_path, c, appended, idc)
+
+
+def _fold_textstats(ss, dst_path, appended, pre_sig):
+    """Text-feature companion: features are row-local, so the batch's
+    rows append directly — O(batch), no re-scan."""
+    from columnar_spark.textstats import merge_textstats, textstats_meta
+
+    tsm = textstats_meta(dst_path)
+    if tsm is not None and {tsm["text_col"], tsm["id_col"]} <= set(appended.columns):
+        merge_textstats(ss, dst_path, appended)
+
+
+def _fold_dedupsig(ss, dst_path, appended, pre_sig):
+    """Near-dup signature companion: row-local, O(batch) append."""
+    from columnar_spark.dedupsig import dedupsig_meta, merge_dedupsig
+
+    dsm = dedupsig_meta(dst_path)
+    if dsm is not None and {dsm["text_col"], dsm["id_col"]} <= set(appended.columns):
+        merge_dedupsig(ss, dst_path, appended)
+
+
+def _fold_projections(ss, dst_path, appended, pre_sig):
+    """Join projections: this table may be the FACT side (its delta joins
+    the current dim) or the DIM side of a sibling's projection (the
+    sibling fact joins this delta). The two increments run serially
+    inside this one fold, so they sum to exactly Δ(F⋈D) —
+    projections.py delta algebra."""
+    from columnar_spark.projections import (
+        merge_projection_dim_delta,
+        merge_projection_fact_delta,
+        projection_meta,
+        projections_on,
+        projections_referencing_dim,
+    )
+
+    for pname in projections_on(dst_path):
+        pm = projection_meta(dst_path, pname)
+        if pm and pm["fact_key"] in appended.columns:
+            merge_projection_fact_delta(ss, dst_path, pname, appended, pre_sig=pre_sig)
+    for fpath, pname in projections_referencing_dim(dst_path):
+        pm = projection_meta(fpath, pname)
+        if pm and pm["dim_key"] in appended.columns:
+            merge_projection_dim_delta(ss, fpath, pname, appended, pre_sig=pre_sig)
+
+
+def _fold_agg_projections(ss, dst_path, appended, pre_sig):
+    """Aggregate projections: the same two-direction delta algebra —
+    this table may be the SOURCE (batch partials append) or an
+    ENRICHMENT dim of a sibling's aggregate (source ⋈ Δdim partials
+    append). aggprojections.py."""
+    from columnar_spark.aggprojections import (
+        agg_projection_path,
+        agg_projections_on,
+        agg_projections_referencing,
+        compact_agg_projection,
+        merge_agg_enrich_delta,
+        merge_agg_fact_delta,
+    )
+
+    for pname in agg_projections_on(dst_path):
+        merge_agg_fact_delta(ss, dst_path, pname, appended, pre_sig=pre_sig)
+        # bounded fragmentation: many micro-batches accumulate a partial
+        # file per append and reads pay a merge groupBy — fold back to
+        # one row per group once the file count says the merge is no
+        # longer cheap (same self-maintenance the text index's delta
+        # folding does at OPTIMIZE, but inline because agg partials are
+        # tiny)
+        pdir = agg_projection_path(dst_path, pname)
+        if len([f for f in os.listdir(pdir) if f.endswith(".parquet")]) > 64:
+            compact_agg_projection(ss, dst_path, pname)
+    rel = os.path.basename(dst_path.rstrip("/"))
+    for fpath, pname in agg_projections_referencing(dst_path):
+        merge_agg_enrich_delta(ss, fpath, pname, rel, appended, pre_sig=pre_sig)
+
+
+def _fold_cohort(ss, dst_path, appended, pre_sig):
+    """Cohort matrix sidecar: correction-partial fold (the one aggregate
+    the rollup algebra cannot maintain)."""
+    from columnar_spark.operators.cohort import append_cohort_batch, cohort_meta
+
+    if cohort_meta(dst_path) is not None:
+        append_cohort_batch(ss, dst_path, appended, pre_sig=pre_sig)
+
+
+_FOLDS = (
+    _fold_stats,
+    _fold_vectors,
+    _fold_value_indexes,
+    _fold_textstats,
+    _fold_dedupsig,
+    _fold_projections,
+    _fold_agg_projections,
+    _fold_cohort,
+)
+
+
+def _run_folds(ss: SparkSession, dst_path: str, appended: DataFrame, pre_sig) -> None:
+    """Run every sidecar fold concurrently on threads of this process.
+
+    Each fold is a few small Spark jobs whose wall time is mostly fixed
+    per-job cost, and the folds write disjoint sidecars, so overlapping
+    them lets the scheduler fill the cores serial folds leave idle. The
+    whole schedule runs under ONE rewrites_disabled: the conf is
+    session-wide, so threads must not flip it against each other, and
+    maintenance reads base data anyway. Each fold runs through
+    inheritable_thread_target, so the caller's job group, tags and local
+    properties carry into its jobs. Every fold finishes before the
+    first error (in schedule order) is re-raised: no fold can still be
+    writing once the caller releases the writer lock, and the ledger
+    keeps its `inflight` marker, so the retry takes the rebuild path."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with rewrites_disabled(ss), ThreadPoolExecutor(
+        max_workers=len(_FOLDS), thread_name_prefix="sidecar-fold"
+    ) as pool:
+        futures = []
+        for fold in _FOLDS:
+            wrap = inheritable_thread_target(ss)
+            # outside pinned-thread mode there is nothing to inherit
+            target = fold if wrap is ss else wrap(fold)
+            futures.append(pool.submit(target, ss, dst_path, appended, pre_sig))
+    # leaving the pool waited for every fold; result() re-raises
+    for fut in futures:
+        fut.result()
+
+
 def append_batch(
     batch_df: DataFrame,
     dst_path: str,
@@ -390,13 +622,23 @@ def append_batch(
     batch_id: int | None = None,
 ) -> bool:
     """Append one batch to a table with full sidecar maintenance: the
-    normalized rows land in the table, the stats sketch/manifest merge
-    in the batch's contribution (O(batch), mergeable HLL + associative
-    min/max/counts), and — if the table carries a persisted IVF-PQ
-    index — the batch's codes append with the existing centroids/
-    codebooks (no retrain). One contract shared by batch CLI appends and
-    the streaming foreachBatch sink, mirroring the reference's
-    storage-plus-sidecars rebuild unit (secondary.cpp:391-434, E9).
+    normalized rows land in the table, then every sidecar family folds
+    the batch's contribution in — the stats sketch/manifest (O(batch),
+    mergeable HLL + associative min/max/counts), the persisted IVF-PQ
+    codes under the existing centroids/codebooks (no retrain), the
+    value/posting indexes, the row-local companions, the projections
+    and the cohort matrix. The folds run concurrently (module docstring,
+    "Fold schedule"): each writes only its own sidecars and reads only
+    base tables, the batch and its own sidecars, and the call returns —
+    or raises the first fold error — only after every fold finished.
+    While the folds run, the sidecar rewrites are off for the whole
+    session (`rewrites_disabled` is a session conf): a query another
+    thread runs on the same session during an append gets the same
+    answer from its base-table plan, without the count, value-index or
+    rollup shortcuts. The text-index and vocab appends follow serially.
+    One contract shared by batch CLI appends and the streaming
+    foreachBatch sink, mirroring the reference's storage-plus-sidecars
+    rebuild unit (secondary.cpp:391-434, E9).
 
     With `batch_id` (the streaming epoch id) the ENTIRE application is
     replay-safe through the per-table ledger (module docstring); returns
@@ -471,181 +713,13 @@ def append_batch(
             # sidecars merge from the COMMITTED rows, not a re-evaluation of
             # the batch plan (same principle as the text index counting its
             # written delta)
-            appended = ss.read.parquet(*moved) if moved else None
+            # (the known schema spares a schema-inference job)
+            appended = ss.read.schema(out.schema).parquet(*moved) if moved else None
 
         if crashed:
             _rebuild_sidecars(ss, dst_path)
         elif appended is not None:
-            sp = sketch_path(dst_path)
-            if os.path.isdir(sp):
-                merged = merge_sketches(ss.read.parquet(sp), build_stats_sketch(appended))
-            else:
-                # first sidecar for this table: the table may have pre-existing
-                # rows the batch sketch wouldn't cover — bootstrap from the full
-                # post-append table (one-time O(table); every later append merges
-                # O(batch)). For a brand-new table this reads exactly the batch.
-                merged = build_stats_sketch(ss.read.parquet(dst_path))
-            # materialize before overwriting the path the plan reads from
-            rows = merged.collect()  # n_columns tiny rows
-            merged_df = ss.createDataFrame(rows, merged.schema)
-            merged_df.coalesce(1).write.mode("overwrite").parquet(sp)
-            from columnar_spark.stats import write_stats_sidecar
-
-            write_stats_sidecar(
-                ss, manifest_from_sketch(merged_df).coalesce(1), dst_path
-            )
-            # Same contract for the vector sidecar: encode the batch with the
-            # EXISTING centroids/codebooks and append its codes — rebuild
-            # happens at compaction, like the reference's segment rebuilds.
-            from columnar_spark.operators.knn_index import (
-                _load_vector_index_dir,
-                append_to_vector_index,
-                vector_index_dirs,
-            )
-
-            # check_fresh=False: the table append above legitimately moved the
-            # signature ahead of the sidecar's recorded one. Every
-            # per-attribute artifact (root + col=*) absorbs the batch.
-            for vdir in vector_index_dirs(dst_path):
-                vidx = _load_vector_index_dir(dst_path, vdir, check_fresh=False)
-                if vidx is not None and vidx.vec_col in appended.columns:
-                    append_to_vector_index(
-                        ss, appended, dst_path, vec_col=vidx.vec_col
-                    )
-            # ... and the HNSW graph sidecars: touched sub-graphs extend
-            # with deterministic level sampling (replay-safe); untouched
-            # parts are not read or written.
-            from columnar_spark.operators.hnsw_index import (
-                append_to_graph_index,
-                graph_index_dirs,
-                load_graph_index_meta,
-            )
-
-            for gdir in graph_index_dirs(dst_path):
-                gmeta = load_graph_index_meta(
-                    dst_path, check_fresh=False, index_path=gdir
-                )
-                if gmeta is not None and gmeta["vec_col"] in appended.columns:
-                    append_to_graph_index(ss, appended, dst_path, index_path=gdir)
-            # Persisted value-index sidecars (A11 artifact): fold the batch's
-            # value counts in — O(index + batch-ndv), same merge contract.
-            from columnar_spark.stats import (
-                composite_index_cols,
-                json_index_meta,
-                merge_posting_index,
-                merge_value_index,
-                persisted_posting_index_cols,
-                persisted_value_index_cols,
-                posting_index_id_col,
-            )
-
-            for c in persisted_value_index_cols(dst_path):
-                jmeta = json_index_meta(dst_path, c)
-                cmeta = composite_index_cols(dst_path, c)
-                if (
-                    c in appended.columns
-                    or (jmeta is not None and jmeta["parent"] in appended.columns)
-                    or (
-                        cmeta is not None
-                        and all(x in appended.columns for x in cmeta)
-                    )
-                ):
-                    # JSON field / composite indexes merge from their
-                    # source columns (the virtual key is computed inside
-                    # merge_value_index)
-                    merge_value_index(ss, dst_path, c, appended)
-            for c in persisted_posting_index_cols(dst_path):
-                idc = posting_index_id_col(dst_path, c)
-                if c in appended.columns and idc and idc in appended.columns:
-                    merge_posting_index(ss, dst_path, c, appended, idc)
-            # Text-feature companion: features are row-local, so the
-            # batch's rows append directly — O(batch), no re-scan.
-            from columnar_spark.textstats import merge_textstats, textstats_meta
-
-            tsm = textstats_meta(dst_path)
-            if (
-                tsm is not None
-                and tsm["text_col"] in appended.columns
-                and tsm["id_col"] in appended.columns
-            ):
-                merge_textstats(ss, dst_path, appended)
-            # Near-dup signature companion: row-local, O(batch) append.
-            from columnar_spark.dedupsig import dedupsig_meta, merge_dedupsig
-
-            dsm = dedupsig_meta(dst_path)
-            if (
-                dsm is not None
-                and dsm["text_col"] in appended.columns
-                and dsm["id_col"] in appended.columns
-            ):
-                merge_dedupsig(ss, dst_path, appended)
-            # Join projections: this table may be the FACT side (its
-            # delta joins the current dim) or the DIM side of a sibling's
-            # projection (the sibling fact joins this delta). Serial
-            # application under the writer lock makes the two increments
-            # sum to exactly Δ(F⋈D) — projections.py delta algebra.
-            from columnar_spark.projections import (
-                merge_projection_dim_delta,
-                merge_projection_fact_delta,
-                projection_meta,
-                projections_on,
-                projections_referencing_dim,
-            )
-
-            for pname in projections_on(dst_path):
-                pm = projection_meta(dst_path, pname)
-                if pm and pm["fact_key"] in appended.columns:
-                    merge_projection_fact_delta(ss, dst_path, pname, appended,
-                                                pre_sig=pre_sig)
-            for fpath, pname in projections_referencing_dim(dst_path):
-                pm = projection_meta(fpath, pname)
-                if pm and pm["dim_key"] in appended.columns:
-                    merge_projection_dim_delta(ss, fpath, pname, appended,
-                                               pre_sig=pre_sig)
-            # Aggregate projections: same two-direction delta algebra —
-            # this table may be the SOURCE (batch partials append) or an
-            # ENRICHMENT dim of a sibling's aggregate (source ⋈ Δdim
-            # partials append). aggprojections.py.
-            import os as _os
-
-            from columnar_spark.aggprojections import (
-                agg_projections_on,
-                agg_projections_referencing,
-                merge_agg_enrich_delta,
-                merge_agg_fact_delta,
-            )
-
-            from columnar_spark.aggprojections import (
-                agg_projection_path,
-                compact_agg_projection,
-            )
-
-            for pname in agg_projections_on(dst_path):
-                merge_agg_fact_delta(ss, dst_path, pname, appended,
-                                     pre_sig=pre_sig)
-                # bounded fragmentation: many micro-batches accumulate a
-                # partial file per append and reads pay a merge groupBy —
-                # fold back to one row per group once the file count says
-                # the merge is no longer cheap (same self-maintenance the
-                # text index's delta folding does at OPTIMIZE, but inline
-                # because agg partials are tiny)
-                pdir = agg_projection_path(dst_path, pname)
-                if len([f for f in _os.listdir(pdir)
-                        if f.endswith(".parquet")]) > 64:
-                    compact_agg_projection(ss, dst_path, pname)
-            _rel = _os.path.basename(dst_path.rstrip("/"))
-            for fpath, pname in agg_projections_referencing(dst_path):
-                merge_agg_enrich_delta(ss, fpath, pname, _rel, appended,
-                                       pre_sig=pre_sig)
-            # Cohort matrix sidecar: correction-partial fold (the one
-            # aggregate the rollup algebra cannot maintain).
-            from columnar_spark.operators.cohort import (
-                append_cohort_batch,
-                cohort_meta,
-            )
-
-            if cohort_meta(dst_path) is not None:
-                append_cohort_batch(ss, dst_path, appended, pre_sig=pre_sig)
+            _run_folds(ss, dst_path, appended, pre_sig)
 
         # Inverted-text + vocab sidecars: their own applied-batch staging
         # makes these calls retry-exact under BOTH the incremental and the

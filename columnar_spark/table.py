@@ -28,30 +28,13 @@ from columnar_spark.operators.knn import knn_topk, knn_topk_ivf, train_centroids
 from columnar_spark.plans.explain import AccessPathReport, access_path_report
 from columnar_spark.session import tune
 from columnar_spark.stats import (
+    _local_relation,
     build_stats_manifest,
     build_value_index,
     covered_count,
     estimate_selectivity,
     stats_can_match,
 )
-
-
-def _local_relation(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Driver-local copy of a small DataFrame as a JVM LocalTableScan.
-
-    `createDataFrame(df.collect())` builds a Python-pickled ExistingRDD
-    that re-crosses the JVM->Python boundary on EVERY execution of every
-    plan that embeds it (~0.3s/exec fixed cost, measured at sf0.1); the
-    Arrow round-trip (DataFrame.toArrow -> createDataFrame(pa.Table))
-    yields a LocalRelation evaluated entirely JVM-side, type-exact for
-    every Spark SQL type Arrow can carry (bigint/NULLs/decimal/date
-    round-trip pinned in tests). Falls back to the row path when Arrow
-    cannot represent the schema."""
-    try:
-        out = spark.createDataFrame(df.toArrow(), schema=df.schema)
-    except Exception:
-        out = spark.createDataFrame(df.collect(), df.schema)
-    return out
 
 
 class Engine:
@@ -2155,10 +2138,13 @@ class Engine:
         # Materialized-view routing: a time-bucketed GROUP BY served from
         # the continuous-rollup sidecar (merge-on-read over partials) —
         # O(buckets x keys) instead of a table scan. Freshness-gated: the
-        # rollup's total row count must equal the table's manifest
-        # row_count (rows with NULL ts are absent from both the rollup
-        # and the bucketed GROUP BY result, but a NULL-ts table would
-        # fail this equality and conservatively fall back).
+        # rollup's recorded table signature must match the table (the
+        # index_is_fresh gate every sidecar shares — it catches
+        # count-preserving out-of-band rewrites), and its total row
+        # count must equal the table's manifest row_count (rows with
+        # NULL ts are absent from both the rollup and the bucketed
+        # GROUP BY result, but a NULL-ts table would fail this equality
+        # and conservatively fall back).
         from columnar_spark.plans.count_rewrite import (
             parse_time_rollup,
             rollup_route_df,
@@ -2166,12 +2152,17 @@ class Engine:
 
         rrw = parse_time_rollup(query)
         if rrw is not None:
-            from columnar_spark.streaming.rollup import load_rollup_sidecar
-
-            loaded = load_rollup_sidecar(
-                self.spark, f"{self.sf_dir}/{rrw.table}.parquet"
+            from columnar_spark.stats import index_is_fresh
+            from columnar_spark.streaming.rollup import (
+                load_rollup_sidecar,
+                rollup_sidecar_path,
             )
-            if loaded is not None:
+
+            rtable = f"{self.sf_dir}/{rrw.table}.parquet"
+            loaded = load_rollup_sidecar(self.spark, rtable)
+            if loaded is not None and index_is_fresh(
+                rtable, rollup_sidecar_path(rtable)
+            ):
                 partials, meta = loaded
                 try:
                     out = rollup_route_df(partials, meta, rrw)

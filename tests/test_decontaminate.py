@@ -2,6 +2,7 @@
 right counts, clean docs survive, and the join is broadcast (the corpus
 side must never shuffle its exploded grams)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from columnar_spark.operators.decontaminate import (
@@ -188,3 +189,45 @@ def test_semantic_kernel_empty_eval_set(spark):
     )
     empty = corpus.filter("vec_id < 0").select("embedding")
     assert semantic_contamination_report(corpus, empty).count() == 0
+
+
+@pytest.mark.parametrize("ragged", [False, True], ids=["dense", "ragged"])
+def test_semantic_zero_norm_rows_same_on_both_gate_branches(spark, tmp_path, ragged):
+    """A zero-norm corpus row and a zero-norm eval row score 0/0 — never
+    a hit — on both sides of the kernel size gate. The byte-threshold
+    conf forces each branch: 0 takes the Arrow kernel, a huge value the
+    expression plan. The expression plan must not raise DIVIDE_BY_ZERO
+    under ANSI, and the kernel's per-pair fallback (taken for a batch
+    with a ragged row) must not raise ZeroDivisionError."""
+    from columnar_spark.operators.decontaminate import (
+        KERNEL_BYTES_CONF,
+        semantic_contamination_report,
+    )
+
+    corpus_rows = [
+        (1, [1.0, 0.0, 0.0]),
+        (2, [0.0, 0.0, 0.0]),   # zero-norm corpus row
+        (3, [0.6, 0.8, 0.0]),
+        (4, [0.0, 1.0, 0.0]),
+    ]
+    if ragged:
+        corpus_rows.append((5, [1.0, 0.0]))  # unequal length: NULL, no hit
+    bench_rows = [([0.0, 0.0, 0.0],), ([1.0, 0.0, 0.0],)]  # zero-norm eval row
+    spark.createDataFrame(corpus_rows, "vec_id: long, embedding: array<double>") \
+        .coalesce(1).write.parquet(f"{tmp_path}/corpus")
+    spark.createDataFrame(bench_rows, "embedding: array<double>") \
+        .coalesce(1).write.parquet(f"{tmp_path}/bench")
+    corpus = spark.read.parquet(f"{tmp_path}/corpus")
+    bench = spark.read.parquet(f"{tmp_path}/bench")
+
+    got = {}
+    try:
+        for thr, kernel in (("0", True), (str(2**63 - 1), False)):
+            spark.conf.set(KERNEL_BYTES_CONF, thr)
+            df = semantic_contamination_report(corpus, bench, threshold=0.5)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert ("MapInArrow" in plan) == kernel, plan
+            got[kernel] = sorted(tuple(r) for r in df.collect())
+    finally:
+        spark.conf.unset(KERNEL_BYTES_CONF)
+    assert got[True] == got[False] == [(1, 1, 1.0), (3, 1, 0.6)]

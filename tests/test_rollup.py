@@ -223,3 +223,74 @@ def test_named_user_day_rollup_serves_retention(spark, tmp_path):
     spark.read.parquet(dest).limit(3).write.mode("append").parquet(dest)
     fallback = qs["retention_cohorts"](spark, sf)
     assert "bucket_start" not in fallback._jdf.queryExecution().executedPlan().toString()
+
+
+def test_rollup_routes_refuse_count_preserving_rewrite(spark, tmp_path):
+    """Both rollup routes check the sidecar's recorded table signature.
+    After a COUNT-PRESERVING out-of-band rewrite of events, dated before
+    the rollups, neither sum(cnt) == rows nor the mtime order can see the
+    change. The named user_day route (retention_cohorts) and the
+    Engine.sql day-bucket route must still fall back to the live plan
+    and return the rewritten table's answer."""
+    import os
+    import shutil
+
+    import __spark_entry__ as entry
+
+    from columnar_spark.streaming.rollup import write_rollup_sidecar
+    from columnar_spark.table import Engine
+    from columnar_spark.writer import WriteSpec, write_table
+
+    sf, bare = str(tmp_path / "sf"), str(tmp_path / "bare")
+    # dup-heavy log (six events per user-day), so the user_day route's
+    # selectivity switch (pairs * 3 <= rows) routes
+    src = _events_df(spark, n=1200).withColumn("user_id", F.col("event_id") % 40)
+    dest = f"{sf}/events.parquet"
+    write_table(src, dest, WriteSpec())  # writes the .stats manifest too
+    ev = spark.read.parquet(dest)
+    write_rollup_sidecar(ev, dest)
+    write_rollup_sidecar(ev, dest, keys=("user_id",), name="user_day")
+
+    qs = entry.queries()
+    q = "SELECT date_trunc('day', ts) AS day, COUNT(*) AS n FROM events GROUP BY 1"
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def day_counts(sf_dir):
+        eng = Engine(spark, sf_dir)
+        eng.register_views()
+        return eng.sql(q)
+
+    assert "bucket_start" in plan(qs["retention_cohorts"](spark, sf))
+    before = day_counts(sf)
+    # toString() elides long paths; the partials' ReadSchema is the tell
+    assert "bucket_start" in plan(before)
+    before = rows(before)
+
+    # out-of-band rewrite: half the users' events move one day earlier;
+    # same row count, files back-dated before both rollups
+    rewritten = spark.read.parquet(dest).withColumn(
+        "ts",
+        F.when(F.col("user_id") % 2 == 0, F.col("ts") - F.expr("INTERVAL 1 DAY"))
+        .otherwise(F.col("ts")),
+    )
+    rewritten.write.parquet(f"{tmp_path}/rewrite")
+    shutil.rmtree(dest)
+    shutil.move(f"{tmp_path}/rewrite", dest)
+    for root, _dirs, names in os.walk(dest):
+        for n in names:
+            os.utime(os.path.join(root, n), (946684800, 946684800))
+    shutil.copytree(dest, f"{bare}/events.parquet")  # no sidecars: live plans
+
+    served = qs["retention_cohorts"](spark, sf)
+    assert "bucket_start" not in plan(served), "user_day route served a stale rollup"
+    assert rows(served) == rows(qs["retention_cohorts"](spark, bare))
+
+    after = day_counts(sf)
+    assert "bucket_start" not in plan(after), "Engine.sql served a stale rollup"
+    live = rows(day_counts(bare))
+    assert rows(after) == live and live != before
