@@ -868,18 +868,10 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rollup_sig_fresh(sf_dir: str) -> bool:
-    """Signature gate for the `.rollup` sidecar routes — the same
-    _table_sig.json check the aggregate projections use (recorded by
-    write_rollup_sidecar / re-recorded on maintenance appends). Catches
-    COUNT-PRESERVING out-of-band rewrites of events.parquet the
-    sum(cnt)==rows gate cannot see; sidecars without a recorded
-    signature (older vintages) are served as before."""
-    from columnar_spark.stats import index_is_fresh
-    from columnar_spark.streaming.rollup import rollup_sidecar_path
-
-    table = f"{sf_dir}/events.parquet"
-    return index_is_fresh(table, rollup_sidecar_path(table))
+# The shape of the `.rollup` sidecar every ingested events layout carries
+# (writer.build_sf_layout); the routes below serve from it only through the
+# one freshness gate, rollup.fresh_rollup.
+_DAY_EVENT_ROLLUP = {"bucket": "1 day", "keys": ["event_type"], "value_col": "value"}
 
 
 _BUCKET_SQL = f"""
@@ -897,31 +889,22 @@ def time_bucket_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh `.rollup` sidecar (ingested layouts do): the result comes from
     O(buckets x keys) partials via the associative merge algebra —
     fixed-point-exact sums, identical to the scan plan (freshness gate:
-    rollup total count == stats-manifest row count)."""
-    from columnar_spark.stats import row_count_from_sidecar
-    from columnar_spark.streaming.rollup import load_rollup_sidecar, merge_rollup
+    rollup.fresh_rollup)."""
+    from columnar_spark.streaming.rollup import (
+        fresh_rollup,
+        merge_rollup,
+        unscale_sum_v,
+    )
 
-    loaded = load_rollup_sidecar(spark, f"{sf_dir}/events.parquet")
+    loaded = fresh_rollup(spark, f"{sf_dir}/events.parquet", **_DAY_EVENT_ROLLUP)
     if loaded is not None:
-        partials, meta = loaded
-        rows = row_count_from_sidecar(f"{sf_dir}/events.parquet")
-        if (
-            meta.get("bucket") == "1 day"
-            and meta.get("keys") == ["event_type"]
-            and meta.get("value_col") == "value"
-            and rows is not None
-            and (partials.agg(F.sum("cnt")).first()[0] or 0) == rows
-            and _rollup_sig_fresh(sf_dir)
-        ):
-            from columnar_spark.streaming.rollup import unscale_sum_v
-
-            merged = merge_rollup(partials, keys=("event_type",))
-            return merged.select(
-                F.to_date("bucket_start").alias("day"),
-                F.col("event_type"),
-                F.col("cnt").cast("long").alias("n"),
-                unscale_sum_v(merged).alias("total_value"),
-            )
+        merged = merge_rollup(loaded[0], keys=("event_type",))
+        return merged.select(
+            F.to_date("bucket_start").alias("day"),
+            F.col("event_type"),
+            F.col("cnt").cast("long").alias("n"),
+            unscale_sum_v(merged).alias("total_value"),
+        )
     ev = _events(spark, sf_dir)
     return ev.groupBy(
         F.to_date(F.timestamp_micros(F.col("ts_us"))).alias("day"), F.col("event_type")
@@ -1843,44 +1826,32 @@ def streaming_window_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     day x event_type continuous aggregate continuous_rollup_events
     serves) — merge of associative integer partials, bit-identical to
     the one-shot window aggregate, raw log untouched. Freshness-gated
-    on sum(cnt) == manifest row count; fallback recomputes."""
-    from columnar_spark.stats import row_count_from_sidecar
+    by rollup.fresh_rollup; fallback recomputes."""
     from columnar_spark.streaming.ingest import windowed_counts
-    from columnar_spark.streaming.rollup import load_rollup_sidecar
+    from columnar_spark.streaming.rollup import fresh_rollup
 
-    loaded = load_rollup_sidecar(spark, f"{sf_dir}/events.parquet")
-    if loaded is not None:
-        partials, meta = loaded
-        rows = row_count_from_sidecar(f"{sf_dir}/events.parquet")
-        if (
-            meta.get("bucket") == "1 day"
-            and meta.get("keys") == ["event_type"]
-            and meta.get("value_col") == "value"
-            # legacy sidecars store sum_v as decimal; this route's
-            # _money.unscale assumes the int64 fixed-point encoding
-            # (rollup.unscale_sum_v's dispatch) — fall back otherwise
-            and dict(partials.dtypes).get("sum_v") in ("bigint", "int")
-            and rows is not None
-            and (partials.agg(F.sum("cnt")).first()[0] or 0) == rows
-            and _rollup_sig_fresh(sf_dir)
-        ):
-            ws = F.col("bucket_start").cast("timestamp")
-            return (
-                partials.groupBy(ws.alias("window_start"), F.col("event_type"))
-                .agg(
-                    F.sum("cnt").cast("long").alias("n"),
-                    _money.unscale(F.sum("sum_v"), 2).alias("total_value"),
-                )
-                .select(
-                    "window_start",
-                    (F.col("window_start") + F.expr("INTERVAL 1 DAY")).alias(
-                        "window_end"
-                    ),
-                    "event_type",
-                    "n",
-                    "total_value",
-                )
+    loaded = fresh_rollup(spark, f"{sf_dir}/events.parquet", **_DAY_EVENT_ROLLUP)
+    # legacy sidecars store sum_v as decimal; this route's
+    # _money.unscale assumes the int64 fixed-point encoding
+    # (rollup.unscale_sum_v's dispatch) — fall back otherwise
+    if loaded is not None and dict(loaded[0].dtypes).get("sum_v") in ("bigint", "int"):
+        ws = F.col("bucket_start").cast("timestamp")
+        return (
+            loaded[0].groupBy(ws.alias("window_start"), F.col("event_type"))
+            .agg(
+                F.sum("cnt").cast("long").alias("n"),
+                _money.unscale(F.sum("sum_v"), 2).alias("total_value"),
             )
+            .select(
+                "window_start",
+                (F.col("window_start") + F.expr("INTERVAL 1 DAY")).alias(
+                    "window_end"
+                ),
+                "event_type",
+                "n",
+                "total_value",
+            )
+        )
     ev = _events(spark, sf_dir).withColumn("ts", F.timestamp_micros(F.col("ts_us")))
     return windowed_counts(ev, ts_col="ts", window="1 day", watermark="2 days")
 
@@ -2603,33 +2574,19 @@ def daily_counts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same UTC window start, cnt/sum_v are associative integer
     partials (sum of partial sums == one-shot sum), and a day that has
     events but no purchases still enters the grid via the bounds and
-    zero-fills through the same left join. Freshness-gated on
-    sum(cnt) == manifest row count, full fallback below."""
-    from columnar_spark.stats import row_count_from_sidecar
-    from columnar_spark.streaming.rollup import load_rollup_sidecar
+    zero-fills through the same left join. Freshness-gated by
+    rollup.fresh_rollup, full fallback below."""
+    from columnar_spark.streaming.rollup import fresh_rollup
 
-    day_src = None
-    loaded = load_rollup_sidecar(spark, f"{sf_dir}/events.parquet")
-    if loaded is not None:
-        partials, meta = loaded
-        rows = row_count_from_sidecar(f"{sf_dir}/events.parquet")
-        if (
-            meta.get("bucket") == "1 day"
-            and meta.get("keys") == ["event_type"]
-            and meta.get("value_col") == "value"
-            # same legacy-decimal guard as streaming_window_day's route
-            and dict(partials.dtypes).get("sum_v") in ("bigint", "int")
-            and rows is not None
-            and (partials.agg(F.sum("cnt")).first()[0] or 0) == rows
-            and _rollup_sig_fresh(sf_dir)
-        ):
-            day_src = partials.select(
-                F.to_date(F.col("bucket_start").cast("timestamp")).alias("day"),
-                "event_type",
-                "cnt",
-                "sum_v",
-            )
-    if day_src is not None:
+    loaded = fresh_rollup(spark, f"{sf_dir}/events.parquet", **_DAY_EVENT_ROLLUP)
+    # same legacy-decimal guard as streaming_window_day's route
+    if loaded is not None and dict(loaded[0].dtypes).get("sum_v") in ("bigint", "int"):
+        day_src = loaded[0].select(
+            F.to_date(F.col("bucket_start").cast("timestamp")).alias("day"),
+            "event_type",
+            "cnt",
+            "sum_v",
+        )
         bounds = day_src.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
         daily = (
             day_src.filter(F.col("event_type") == "purchase")
@@ -3913,9 +3870,6 @@ GROUP BY 1, 2
 """
 
 
-_ROLLUP_GATE_CACHE: dict = {}
-
-
 @_q("retention_cohorts", _RETENTION_SQL)
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention matrix: users bucketed by first-seen day,
@@ -3923,9 +3877,8 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     microsecond-days is engine-portable.
 
     Ingested layouts carry the named `user_day` rollup (distinct
-    (user, day-bucket) partials): when its total count equals the
-    table's manifest row count (the Engine.sql rollup freshness gate),
-    the cohort matrix computes from |user x day| partial rows instead
+    (user, day-bucket) partials): when rollup.fresh_rollup passes it
+    (the freshness gate every rollup route shares), the cohort matrix computes from |user x day| partial rows instead
     of the raw event log — bucket_start IS the UTC day boundary, so
     `unix_micros(bucket_start) div 86400000000` equals the live path's
     `ts_us div 86400000000` exactly, and the downstream set algebra
@@ -3951,67 +3904,41 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ev = None
     try:
-        from columnar_spark.stats import (
-            index_is_fresh,
-            row_count_from_sidecar,
-            table_signature,
-        )
-        from columnar_spark.streaming.rollup import load_rollup_sidecar
+        import pyarrow.parquet as _pq
+
+        from columnar_spark import objstore as _objstore
+        from columnar_spark.stats import row_count_from_sidecar
+        from columnar_spark.streaming.rollup import fresh_rollup
 
         tbl = f"{sf_dir}/events.parquet"
-        loaded = load_rollup_sidecar(spark, tbl, name="user_day")
+        # Selectivity switch (the knn_access_path ShouldUseFullscan
+        # philosophy): the pre-deduped pairs only beat the raw scan
+        # when they are a strong reduction. A/B at the 10x corpus
+        # (best-of-4, warm): pairs/events = 0.40 -> routed 0.62s vs
+        # raw 0.55s (the collect_set dominates, not the scan), so
+        # route only below 1/3 — dup-heavy event logs, where the cut
+        # is the whole query. Row counts come from parquet footers
+        # (no data read).
+        pair_rows = sum(
+            _pq.read_metadata(f).num_rows
+            for f in _objstore.data_files(f"{tbl}.rollup-user_day/partials")
+        )
+        rc = row_count_from_sidecar(tbl)
+        if rc is None or pair_rows * 3 > rc:
+            raise ValueError("weak reduction: raw scan is the better plan")
+        loaded = fresh_rollup(
+            spark, tbl, name="user_day", bucket="1 day", keys=["user_id"]
+        )
         if loaded is not None:
-            partials, _meta = loaded
-            # two-part freshness (the JVM rollupFresh recipe): the rollup
-            # must be at least as NEW as the table (an out-of-band append
-            # leaves both the rollup and the stats manifest stale but
-            # mutually consistent — mtime ordering catches that), and the
-            # partial counts must tile the manifest row count exactly
-            roll_dir = tbl + ".rollup-user_day"
-            # Selectivity switch (the knn_access_path ShouldUseFullscan
-            # philosophy): the pre-deduped pairs only beat the raw scan
-            # when they are a strong reduction. A/B at the 10x corpus
-            # (best-of-4, warm): pairs/events = 0.40 -> routed 0.62s vs
-            # raw 0.55s (the collect_set dominates, not the scan), so
-            # route only below 1/3 — dup-heavy event logs, where the cut
-            # is the whole query. Row counts come from parquet footers
-            # (no data read).
-            import pyarrow.parquet as _pq
-
-            from columnar_spark import objstore as _objstore
-
-            pair_rows = sum(
-                _pq.read_metadata(f).num_rows
-                for f in _objstore.data_files(f"{roll_dir}/partials")
+            # bucket_start is TIMESTAMP_NTZ; session tz is UTC so
+            # the cast is exact (same convention as _events)
+            ev = loaded[0].select(
+                "user_id",
+                F.expr(
+                    "unix_micros(CAST(bucket_start AS TIMESTAMP))"
+                    " div 86400000000"
+                ).alias("day"),
             )
-            rc = row_count_from_sidecar(tbl)
-            if rc is None or pair_rows * 3 > rc:
-                raise ValueError("weak reduction: raw scan is the better plan")
-            rsig = tuple(sorted(table_signature(roll_dir).items()))
-            tsig = tuple(sorted(table_signature(tbl).items()))
-            gkey = (_session_key(spark), tbl, rsig, tsig)
-            fresh = _ROLLUP_GATE_CACHE.get(gkey)
-            if fresh is None:
-                fresh = False
-                # the _table_sig.json gate (_rollup_sig_fresh's check)
-                # also catches COUNT-PRESERVING rewrites of events
-                if dict(rsig)["max_mtime_ms"] >= dict(tsig)["max_mtime_ms"] and (
-                    index_is_fresh(tbl, roll_dir)
-                ):
-                    total = partials.agg(F.sum("cnt")).first()[0] or 0
-                    row_count = row_count_from_sidecar(tbl)
-                    fresh = row_count is not None and total == row_count
-                _ROLLUP_GATE_CACHE[gkey] = fresh
-            if fresh:
-                # bucket_start is TIMESTAMP_NTZ; session tz is UTC so
-                # the cast is exact (same convention as _events)
-                ev = partials.select(
-                    "user_id",
-                    F.expr(
-                        "unix_micros(CAST(bucket_start AS TIMESTAMP))"
-                        " div 86400000000"
-                    ).alias("day"),
-                )
     except Exception:
         ev = None  # stale/incompatible sidecar -> raw scan
     if ev is None:
@@ -4610,33 +4537,22 @@ def continuous_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY oracle (associative fixed-point sums, min/max). Ingested layouts
     serve the partials from the `.rollup` sidecar (one scan of O(buckets
     x keys x batches) rows + ONE merge aggregate — the raw log is never
-    touched), gated on sum(cnt) == manifest row count with a
-    bit-identical fallback. The fallback computes batch-tagged partials
-    in ONE events scan (batch = event_id % 4 as an extra partial key) —
+    touched), gated by rollup.fresh_rollup with a bit-identical
+    fallback. The fallback computes batch-tagged partials in ONE events
+    scan (batch = event_id % 4 as an extra partial key) —
     the 4-scan union it replaces proved the same algebra 4x slower;
     batch-split invariance itself is pinned in tests/test_rollup.py."""
-    from columnar_spark.stats import row_count_from_sidecar
     from columnar_spark.streaming.rollup import (
         finalize_rollup,
-        load_rollup_sidecar,
+        fresh_rollup,
         merge_rollup,
         rollup_partials,
     )
 
-    parts = None
-    loaded = load_rollup_sidecar(spark, f"{sf_dir}/events.parquet")
+    loaded = fresh_rollup(spark, f"{sf_dir}/events.parquet", **_DAY_EVENT_ROLLUP)
     if loaded is not None:
-        partials, meta = loaded
-        rows = row_count_from_sidecar(f"{sf_dir}/events.parquet")
-        if (
-            meta.get("bucket") == "1 day"
-            and meta.get("keys") == ["event_type"]
-            and meta.get("value_col") == "value"
-            and rows is not None
-            and (partials.agg(F.sum("cnt")).first()[0] or 0) == rows
-        ):
-            parts = partials
-    if parts is None:
+        parts = loaded[0]
+    else:
         ev = (
             _events(spark, sf_dir)
             .withColumn("ts", F.timestamp_micros(F.col("ts_us")))

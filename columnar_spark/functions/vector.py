@@ -104,9 +104,12 @@ def cosine_sim(
     dim: int | None = None,
 ) -> Column:
     """Cosine similarity; pass b_norm (python float) when b is a constant
-    query vector to keep the plan free of redundant per-row work."""
+    query vector to keep the plan free of redundant per-row work. A
+    zero-norm side has no direction: its similarity is NULL, as for a
+    NULL vector (try_divide — a plain divide raises DIVIDE_BY_ZERO under
+    ANSI)."""
     bn = F.lit(float(b_norm)) if isinstance(b_norm, (int, float)) else (b_norm or norm(b, dim=dim))
-    return dot(a, b, dim=dim) / (norm(a, dim=dim) * bn)
+    return F.try_divide(dot(a, b, dim=dim), norm(a, dim=dim) * bn)
 
 
 def cosine_dist(

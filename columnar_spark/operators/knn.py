@@ -143,7 +143,9 @@ def knn_topk(
             F.max(dist_col).alias("max_dist"),
         )
     # Deterministic tie-break on id keeps results stable across engines.
-    return out.orderBy(F.col(dist_col).asc(), F.col(id_col).asc()).limit(k)
+    # A NULL distance (NULL vector; zero norm under cosine) ranks after
+    # every real neighbour — Spark's plain asc() would put it first.
+    return out.orderBy(F.col(dist_col).asc_nulls_last(), F.col(id_col).asc()).limit(k)
 
 
 def knn_radius(
@@ -176,7 +178,7 @@ def knn_radius(
         dist_col, distance_expr(F.col(vec_col), query_vec, metric, dim=dim)
     ).filter(F.col(dist_col) <= radius)
     if limit is not None:
-        out = out.orderBy(F.col(dist_col).asc(), F.col(id_col).asc()).limit(limit)
+        out = out.orderBy(F.col(dist_col).asc_nulls_last(), F.col(id_col).asc()).limit(limit)
     return out
 
 
@@ -289,7 +291,7 @@ def knn_topk_partitioned_ann(
             )
 
     local = df.select(id_col, vec_col).mapInPandas(batches, out_schema)
-    return local.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(k)
+    return local.orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc()).limit(k)
 
 
 def similarity_self_join(
@@ -474,7 +476,8 @@ def _batch_topk_cosine_arrow(
                 qv = q_vecs[j]
                 for x, y in zip(v, qv):
                     acc += x * y
-                out.append(1.0 - acc / (vn * qn[j]))
+                den = vn * qn[j]  # zero norm: NaN, as numpy's 0/0 below
+                out.append(1.0 - acc / den if den else float("nan"))
             return out
 
         qid_pa_type = qid_arrow_type
@@ -523,15 +526,15 @@ def _batch_topk_cosine_arrow(
                         for j in range(nq_):
                             per_q[j].append((dv[j], rid))
                 for j, cand in enumerate(per_q):
-                    # NULL dist sorts FIRST, NaN LAST (Spark asc order)
+                    # NaN after numbers, NULL last (asc_nulls_last)
                     def key(t):
                         dd, rid = t
                         if dd is None:
-                            return (0, 0.0, rid)
+                            return (2, 0.0, rid)
                         kd = _round_exact(dd) if rd is not None else dd
                         if kd != kd:
-                            return (2, 0.0, rid)
-                        return (1, kd, rid)
+                            return (1, 0.0, rid)
+                        return (0, kd, rid)
 
                     for dd, rid in sorted(cand, key=key)[:kk]:
                         out_qid.append(q_ids[j])
@@ -599,7 +602,7 @@ def _batch_topk_cosine_arrow(
         F.col(q_id_col), F.col(id_col), dist_expr.alias(dist_col)
     )
     w_global = Window.partitionBy(q_id_col).orderBy(
-        F.col(dist_col).asc(), F.col(id_col).asc()
+        F.col(dist_col).asc_nulls_last(), F.col(id_col).asc()
     )
     return (
         scored.withColumn("__rn", F.row_number().over(w_global))
@@ -665,8 +668,8 @@ def knn_batch_topk(
         # O(k x q x tasks). Bit-identical to the fold (sequential
         # accumulation over dims) with margin-safe exact HALF_UP
         # rounding for candidate selection; NULL/ragged rows keep fold
-        # semantics (NULL distance, which ranks FIRST under Spark's
-        # nulls-first ascending order) via a per-row fallback.
+        # semantics (NULL distance, which ranks LAST, after NaN) via a
+        # per-row fallback.
         out = _batch_topk_cosine_arrow(
             df, vec_col, queries, k, id_col, q_id_col, q_vec_col,
             dist_col, round_digits,
@@ -682,9 +685,10 @@ def knn_batch_topk(
         queries = queries.withColumn(
             "__qn", _norm(F.col(q_vec_col).cast("array<double>"))
         )
-        dist_expr = F.lit(1.0) - _dot(
-            F.col(vec_col).cast("array<double>"), F.col(q_vec_col)
-        ) / (F.col("__vn") * F.col("__qn"))
+        dist_expr = F.lit(1.0) - F.try_divide(
+            _dot(F.col(vec_col).cast("array<double>"), F.col(q_vec_col)),
+            F.col("__vn") * F.col("__qn"),
+        )
     else:
         dist_expr = metric_fn(F.col(vec_col).cast("array<double>"), F.col(q_vec_col))
     if round_digits is not None:
@@ -698,7 +702,7 @@ def knn_batch_topk(
         F.spark_partition_id().alias("__pid"),
     )
     w_local = Window.partitionBy(q_id_col, "__pid").orderBy(
-        F.col(dist_col).asc(), F.col(id_col).asc()
+        F.col(dist_col).asc_nulls_last(), F.col(id_col).asc()
     )
     local = (
         joined.withColumn("__rn", F.row_number().over(w_local))
@@ -706,7 +710,7 @@ def knn_batch_topk(
         .drop("__rn", "__pid")
     )
     w_global = Window.partitionBy(q_id_col).orderBy(
-        F.col(dist_col).asc(), F.col(id_col).asc()
+        F.col(dist_col).asc_nulls_last(), F.col(id_col).asc()
     )
     return (
         local.withColumn("__rn", F.row_number().over(w_global))
@@ -782,11 +786,15 @@ def knn_batch_topk_ivf(
         metric_fn(F.col(vec_col).cast("array<double>"), F.col(q_vec_col)).alias("dist"),
         F.spark_partition_id().alias("__pid"),
     )
-    w_local = Window.partitionBy(q_id_col, "__pid").orderBy(F.col("dist").asc(), F.col(id_col).asc())
+    w_local = Window.partitionBy(q_id_col, "__pid").orderBy(
+        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
+    )
     local = scored.withColumn("__rn", F.row_number().over(w_local)).filter(
         F.col("__rn") <= k
     ).drop("__rn", "__pid")
-    w_global = Window.partitionBy(q_id_col).orderBy(F.col("dist").asc(), F.col(id_col).asc())
+    w_global = Window.partitionBy(q_id_col).orderBy(
+        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
+    )
     return local.withColumn("__rn", F.row_number().over(w_global)).filter(
         F.col("__rn") <= k
     ).drop("__rn")

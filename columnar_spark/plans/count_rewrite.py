@@ -558,116 +558,6 @@ def distinct_count_df(index_df: DataFrame, column: str, alias: str) -> DataFrame
     )
 
 
-# ------------------------------------------------ materialized rollup
-# Time-bucketed GROUP BY routed onto the continuous-aggregate sidecar
-# (the materialized-view matching every warehouse does; here the view
-# is the engine's own append-only rollup partials).
-
-_ROLLUP_RE = re.compile(
-    r"^\s*SELECT\s+DATE_TRUNC\s*\(\s*'(?P<unit>day|hour|week|month)'\s*,\s*(?P<ts>\w+)\s*\)"
-    r"\s+AS\s+(?P<balias>\w+)\s*"
-    r"(?:,\s*(?P<key>\w+)\s*)?"
-    r"(?P<aggs>(?:,\s*\w+\s*\(\s*[\w*]+\s*\)\s+AS\s+\w+\s*)+)"
-    r"FROM\s+(?P<table>\w+)\s+GROUP\s+BY\s+(?P<grp>[\w\s,()']+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ROLLUP_AGG_RE = re.compile(
-    r",\s*(?P<fn>COUNT|SUM|MIN|MAX|AVG)\s*\(\s*(?P<arg>[\w*]+)\s*\)\s+AS\s+(?P<alias>\w+)",
-    re.IGNORECASE,
-)
-
-_UNIT_TO_BUCKET = {"hour": "1 hour", "day": "1 day", "week": "1 week", "month": "1 month"}
-
-
-@dataclass
-class RollupRewrite:
-    table: str
-    ts_col: str
-    unit: str
-    bucket_alias: str
-    key: str | None
-    aggs: list[tuple[str, str, str]]  # (fn, arg, alias)
-
-
-def parse_time_rollup(sql: str) -> RollupRewrite | None:
-    """`SELECT date_trunc('<unit>', ts) AS b [, key], <aggs...> FROM t
-    GROUP BY ...` where every agg is COUNT(*) / SUM / MIN / MAX / AVG
-    over one value column. The GROUP BY list must be exactly the bucket
-    expression (or its alias/position) plus the optional key."""
-    m = _ROLLUP_RE.match(sql)
-    if not m:
-        return None
-    aggs = [
-        (a.group("fn").upper(), a.group("arg"), a.group("alias"))
-        for a in _ROLLUP_AGG_RE.finditer(m.group("aggs"))
-    ]
-    if not aggs:
-        return None
-    # group-by sanity: bucket expr/alias/1 plus optional key/2
-    grp = [g.strip().lower() for g in m.group("grp").split(",")]
-    expected_first = {
-        "1",
-        m.group("balias").lower(),
-        f"date_trunc('{m.group('unit').lower()}', {m.group('ts').lower()})",
-    }
-    if grp[0] not in expected_first:
-        return None
-    if m.group("key"):
-        if len(grp) != 2 or grp[1] not in {"2", m.group("key").lower()}:
-            return None
-    elif len(grp) != 1:
-        return None
-    return RollupRewrite(
-        table=m.group("table"),
-        ts_col=m.group("ts"),
-        unit=m.group("unit").lower(),
-        bucket_alias=m.group("balias"),
-        key=m.group("key"),
-        aggs=aggs,
-    )
-
-
-def rollup_route_df(partials: DataFrame, meta: dict, rw: RollupRewrite) -> DataFrame | None:
-    """Serve the query from rollup partials, or None when the sidecar
-    does not cover it (different ts/bucket/key/value columns). SUMs are
-    the rollup's decimal-exact form cast to double."""
-    if meta["ts_col"].lower() != rw.ts_col.lower():
-        return None
-    if _UNIT_TO_BUCKET.get(rw.unit) != meta["bucket"]:
-        return None
-    keys = [k.lower() for k in meta["keys"]]
-    if rw.key is None:
-        pass  # roll the keys up further — partials merge across keys
-    elif [rw.key.lower()] != keys:
-        return None
-    vcol = meta["value_col"].lower()
-    for fn, arg, _ in rw.aggs:
-        if fn == "COUNT":
-            if arg != "*":
-                return None
-        elif arg.lower() != vcol:
-            return None
-
-    from columnar_spark.streaming.rollup import merge_rollup, unscale_sum_v
-
-    merged = merge_rollup(partials, keys=meta["keys"] if rw.key else ())
-    cols = [F.col("bucket_start").alias(rw.bucket_alias)]
-    if rw.key:
-        cols.append(F.col(rw.key))
-    for fn, _, alias in rw.aggs:
-        if fn == "COUNT":
-            cols.append(F.col("cnt").cast("long").alias(alias))
-        elif fn == "SUM":
-            cols.append(unscale_sum_v(merged).alias(alias))
-        elif fn == "MIN":
-            cols.append(F.col("min_v").alias(alias))
-        elif fn == "MAX":
-            cols.append(F.col("max_v").alias(alias))
-        elif fn == "AVG":
-            cols.append((unscale_sum_v(merged) / F.col("cnt")).alias(alias))
-    return merged.select(*cols)
-
-
 # ----------------------------------- aggregate-projection GROUP BYs
 # Plain-SQL routing onto the .aggproj sidecars (aggprojections.py): a
 # filter + GROUP BY + associative-measure query whose keys, predicate

@@ -161,9 +161,10 @@ def append_rollup_batch(
 def _rerecord_sidecar_sig(rollup_path: str) -> None:
     """When `rollup_path` follows the <table>.rollup[-name][/partials]
     sidecar convention and the base table exists, re-record the table
-    signature so the signature freshness gate tracks legitimate
-    maintenance appends (the rollup append runs AFTER the table append
-    in the ingest flow). Non-sidecar rollup paths are untouched."""
+    signature so the freshness gates (fresh_rollup and the JVM rule's
+    indexFresh) track legitimate maintenance appends (the rollup append
+    runs AFTER the table append in the ingest flow). Non-sidecar rollup
+    paths are untouched."""
     import os
     import re
 
@@ -226,8 +227,10 @@ def read_rollup(
 
 # ------------------------------------------------ sidecar convention
 # A rollup registered BESIDE its base table (like .vidx/.ftidx/.knn)
-# carries a meta.json describing what it aggregates — enough for the
-# Engine.sql materialized-view router to verify a query matches.
+# carries a meta.json describing what it aggregates — enough for a route
+# to verify a query matches: the JVM rule (CountRewriteRule.rewriteRollup,
+# behind spark.sql and Engine.sql) and the hand-written routes in
+# __spark_entry__.py, which all go through fresh_rollup.
 
 def rollup_sidecar_path(table_path: str, name: str | None = None) -> str:
     """Default rollup lives at <table>.rollup; NAMED rollups (a table can
@@ -275,10 +278,11 @@ def write_rollup_sidecar(
         },
     )
     # Record the base table's content signature (the _aggp-style gate):
-    # the count-based freshness check catches count-changing rewrites
-    # but not value-preserving ones; routes additionally compare this
-    # signature when present. Appends into the sidecar re-record it
-    # (append_rollup_batch), so streaming maintenance stays served.
+    # the count-based completeness check catches count-changing rewrites
+    # but not value-preserving ones; both rollup gates (fresh_rollup and
+    # the JVM rule's indexFresh) compare this signature first. Appends
+    # into the sidecar re-record it (append_rollup_batch), so streaming
+    # maintenance stays served.
     from columnar_spark.stats import _write_table_sig
 
     _write_table_sig(table_path, root)
@@ -300,6 +304,73 @@ def load_rollup_sidecar(spark: SparkSession, table_path: str, name: str | None =
     if meta is None:
         return None
     return objstore.read_df(spark, pdir), meta
+
+
+# Cached completeness verdicts, one per sidecar root: ((stats dir sig,
+# partials dir sig), fresh). A rebuilt manifest or a rollup append
+# changes a signature and forces a recheck — CountRewriteRule.FRESHNESS.
+_FRESHNESS: dict = {}
+
+
+def fresh_rollup(
+    spark: SparkSession, table_path: str, name: str | None = None, **shape
+):
+    """-> (partials_df, meta) when the sidecar rollup may serve a query
+    over `table_path`, else None (the caller runs its base plan). The
+    Python twin of CountRewriteRule.rewriteRollup's gate, shared by every
+    hand-written rollup route:
+
+    - meta.json matches `shape` (e.g. bucket="1 day",
+      keys=["event_type"], value_col="value");
+    - the recorded `_table_sig.json` matches the table
+      (stats.index_is_fresh: catches count-preserving out-of-band
+      rewrites); a legacy sidecar without one must be at least as new
+      as the table (an out-of-band append leaves rollup and manifest
+      stale but mutually consistent);
+    - sum(cnt) equals the `.stats` manifest row count. This is the one
+      check that costs a Spark job, so its verdict is cached per
+      signature of the stats and partials dirs.
+
+    The JVM gate (`indexFresh` + `rollupFresh`) makes every check but
+    the legacy mtime-order test, so on a rollup without
+    `_table_sig.json` an out-of-band append that leaves the manifest
+    unrefreshed is refused here but still served through spark.sql.
+    """
+    import os
+
+    from columnar_spark.stats import (
+        index_is_fresh,
+        row_count_from_sidecar,
+        table_signature,
+    )
+
+    loaded = load_rollup_sidecar(spark, table_path, name)
+    if loaded is None:
+        return None
+    partials, meta = loaded
+    if any(meta.get(k) != v for k, v in shape.items()):
+        return None
+    root = rollup_sidecar_path(table_path, name)
+    pdir = os.path.join(root, "partials")
+    if not index_is_fresh(table_path, root):
+        return None
+    if not os.path.isfile(os.path.join(root, "_table_sig.json")) and (
+        table_signature(pdir)["max_mtime_ms"]
+        < table_signature(table_path)["max_mtime_ms"]
+    ):
+        return None
+    rows = row_count_from_sidecar(table_path)
+    if rows is None:
+        return None
+    sigs = tuple(
+        tuple(table_signature(d).values())
+        for d in (table_path.rstrip("/") + ".stats", pdir)
+    )
+    hit = _FRESHNESS.get(root)
+    if hit is None or hit[0] != sigs:
+        total = partials.agg(F.sum("cnt")).first()[0] or 0
+        hit = _FRESHNESS[root] = (sigs, total == rows)
+    return loaded if hit[1] else None
 
 
 def compact_rollup(

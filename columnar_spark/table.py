@@ -748,10 +748,11 @@ class Engine:
         shortlist #1; reference CalcCount, secondary.cpp:531-551): a
         COUNT(*) whose WHERE conjuncts all target one column with a built
         value index is answered from the few-KB index table — the base
-        scan disappears from the plan. Everything else runs unchanged
-        through spark.sql. (A JVM `spark.sql.extensions` rule is the
-        production placement; Python cannot inject Catalyst rules, so the
-        engine's SQL surface hosts the rewrite.)"""
+        scan disappears from the plan. Everything else runs through
+        spark.sql, where the JVM Catalyst rule (columnar_spark/jvm/,
+        loaded by session.get_spark) serves what it covers — among it
+        the time-bucketed GROUP BYs over the `.rollup` sidecar, which
+        are routed there and only there."""
         from columnar_spark.plans.count_rewrite import (
             covered_count_df,
             parse_covered_count,
@@ -2135,49 +2136,6 @@ class Engine:
             if idx is not None:
                 return distinct_count_df(idx, drw[1], drw[2])
 
-        # Materialized-view routing: a time-bucketed GROUP BY served from
-        # the continuous-rollup sidecar (merge-on-read over partials) —
-        # O(buckets x keys) instead of a table scan. Freshness-gated: the
-        # rollup's recorded table signature must match the table (the
-        # index_is_fresh gate every sidecar shares — it catches
-        # count-preserving out-of-band rewrites), and its total row
-        # count must equal the table's manifest row_count (rows with
-        # NULL ts are absent from both the rollup and the bucketed
-        # GROUP BY result, but a NULL-ts table would fail this equality
-        # and conservatively fall back).
-        from columnar_spark.plans.count_rewrite import (
-            parse_time_rollup,
-            rollup_route_df,
-        )
-
-        rrw = parse_time_rollup(query)
-        if rrw is not None:
-            from columnar_spark.stats import index_is_fresh
-            from columnar_spark.streaming.rollup import (
-                load_rollup_sidecar,
-                rollup_sidecar_path,
-            )
-
-            rtable = f"{self.sf_dir}/{rrw.table}.parquet"
-            loaded = load_rollup_sidecar(self.spark, rtable)
-            if loaded is not None and index_is_fresh(
-                rtable, rollup_sidecar_path(rtable)
-            ):
-                partials, meta = loaded
-                try:
-                    out = rollup_route_df(partials, meta, rrw)
-                    if out is not None:
-                        from pyspark.sql import functions as _F
-
-                        total = partials.agg(_F.sum("cnt")).first()[0] or 0
-                        row_count = next(
-                            iter(self.stats(rrw.table).values())
-                        )["row_count"]
-                        if total == row_count:
-                            return out
-                except Exception:
-                    pass  # stale/incompatible sidecar -> plain plan
-
         # Aggregate-projection routing: a filter + GROUP BY +
         # associative-measure query (optionally with the projection's
         # exact inner-join chain spelled out) whose keys, predicate
@@ -2214,8 +2172,8 @@ class Engine:
         # Join-MV routing: a two-table inner equi-join whose (tables,
         # keys) match a declared join projection rewrites its FROM
         # clause onto the pre-joined sidecar — the per-query fact
-        # shuffle disappears, like the rollup routing above. Safe by
-        # construction: the rewritten query must ANALYZE (any reference
+        # shuffle disappears, like the aggregate-projection route above.
+        # Safe by construction: the rewritten query must ANALYZE (any reference
         # to a column the projection does not carry raises, and the
         # original plan runs); the projection view itself is re-resolved
         # at use (fresh sidecar or live defining join).

@@ -186,3 +186,27 @@ def test_fuzz_spans_and_strip(spark, texts, n):
         for r in strip_repeated_spans(df, n=n, keep_first=True).collect()
     )
     assert stripped == py_strip(docs, n, keep_first=True)
+
+
+def test_kernel_gate_branches_same_rows(spark, tmp_path):
+    """Both sides of the rolling-hash kernel size gate
+    (dedup._spans_kernel_worthwhile) return identical rows. The
+    byte-threshold conf forces each branch: 0 takes the Arrow kernel, a
+    huge value the gram-text keys. The docs are read from parquet so
+    the size estimate is real (an in-memory frame reads Long.MaxValue)."""
+    from columnar_spark.operators.dedup import SPANS_KERNEL_BYTES_CONF
+
+    _df(spark, DOCS + [(10 + i, t) for i, t in EDGE_DOCS]) \
+        .coalesce(1).write.parquet(f"{tmp_path}/docs")
+    df = spark.read.parquet(f"{tmp_path}/docs")
+    got = {}
+    try:
+        for thr, kernel in (("0", True), (str(2**63 - 1), False)):
+            spark.conf.set(SPANS_KERNEL_BYTES_CONF, thr)
+            out = repeated_spans(df, n=5, keep_first=True, hash_grams="kernel")
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert ("MapInArrow" in plan) == kernel, plan
+            got[kernel] = sorted(tuple(r) for r in out.collect())
+    finally:
+        spark.conf.unset(SPANS_KERNEL_BYTES_CONF)
+    assert got[True] == got[False] and got[True]

@@ -226,12 +226,13 @@ def test_named_user_day_rollup_serves_retention(spark, tmp_path):
 
 
 def test_rollup_routes_refuse_count_preserving_rewrite(spark, tmp_path):
-    """Both rollup routes check the sidecar's recorded table signature.
+    """Every rollup route checks the sidecar's recorded table signature.
     After a COUNT-PRESERVING out-of-band rewrite of events, dated before
     the rollups, neither sum(cnt) == rows nor the mtime order can see the
-    change. The named user_day route (retention_cohorts) and the
-    Engine.sql day-bucket route must still fall back to the live plan
-    and return the rewritten table's answer."""
+    change. The named user_day route (retention_cohorts), the four
+    `.rollup` entry routes and the Engine.sql day-bucket route must
+    still fall back to the live plan and return the rewritten table's
+    answer."""
     import os
     import shutil
 
@@ -265,7 +266,17 @@ def test_rollup_routes_refuse_count_preserving_rewrite(spark, tmp_path):
         eng.register_views()
         return eng.sql(q)
 
+    day_routes = [
+        "time_bucket_agg",
+        "streaming_window_day",
+        "daily_counts_gapfill",
+        "continuous_rollup_events",
+    ]
     assert "bucket_start" in plan(qs["retention_cohorts"](spark, sf))
+    # continuous_rollup_events' live plan names its own bucket_start
+    # column; the partials' ReadSchema is the tell for the day routes
+    for name in day_routes:
+        assert "struct<bucket_start" in plan(qs[name](spark, sf)), name
     before = day_counts(sf)
     # toString() elides long paths; the partials' ReadSchema is the tell
     assert "bucket_start" in plan(before)
@@ -289,8 +300,76 @@ def test_rollup_routes_refuse_count_preserving_rewrite(spark, tmp_path):
     served = qs["retention_cohorts"](spark, sf)
     assert "bucket_start" not in plan(served), "user_day route served a stale rollup"
     assert rows(served) == rows(qs["retention_cohorts"](spark, bare))
+    for name in day_routes:
+        served = qs[name](spark, sf)
+        assert "struct<bucket_start" not in plan(served), f"{name} served a stale rollup"
+        assert rows(served) == rows(qs[name](spark, bare)), name
 
     after = day_counts(sf)
     assert "bucket_start" not in plan(after), "Engine.sql served a stale rollup"
     live = rows(day_counts(bare))
     assert rows(after) == live and live != before
+
+
+def test_legacy_rollup_refuses_out_of_band_append(spark, tmp_path):
+    """A legacy rollup (no recorded `_table_sig.json`) has no signature
+    to compare. After an out-of-band append that refreshes neither the
+    rollups nor the `.stats` manifest, sum(cnt) still equals the
+    manifest's row count, so only the gate's mtime-order test sees the
+    change: all five hand-written rollup routes must fall back to the
+    live plan and return the appended table's answer."""
+    import os
+    import shutil
+
+    import __spark_entry__ as entry
+
+    from columnar_spark.stats import row_count_from_sidecar
+    from columnar_spark.streaming.rollup import (
+        fresh_rollup,
+        rollup_sidecar_path,
+        write_rollup_sidecar,
+    )
+    from columnar_spark.writer import WriteSpec, write_table
+
+    sf, bare = str(tmp_path / "sf"), str(tmp_path / "bare")
+    # dup-heavy log, so the user_day route's selectivity switch routes
+    src = _events_df(spark, n=1200).withColumn("user_id", F.col("event_id") % 40)
+    dest = f"{sf}/events.parquet"
+    write_table(src, dest, WriteSpec())  # writes the .stats manifest too
+    ev = spark.read.parquet(dest)
+    write_rollup_sidecar(ev, dest)
+    write_rollup_sidecar(ev, dest, keys=("user_id",), name="user_day")
+    for name in (None, "user_day"):
+        os.remove(os.path.join(rollup_sidecar_path(dest, name), "_table_sig.json"))
+
+    qs = entry.queries()
+    routes = [
+        "time_bucket_agg",
+        "streaming_window_day",
+        "daily_counts_gapfill",
+        "continuous_rollup_events",
+        "retention_cohorts",
+    ]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def routed(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return "struct<bucket_start" in plan
+
+    for name in routes:
+        assert routed(qs[name](spark, sf)), f"{name} refused a fresh legacy rollup"
+
+    # out-of-band append, newer than both rollups; the manifest keeps
+    # the old count, which the rollups' partials still sum to
+    spark.read.parquet(dest).limit(5).write.mode("append").parquet(dest)
+    shutil.copytree(dest, f"{bare}/events.parquet")  # no sidecars: live plans
+    partials = spark.read.parquet(f"{rollup_sidecar_path(dest)}/partials")
+    assert partials.agg(F.sum("cnt")).first()[0] == row_count_from_sidecar(dest)
+    assert fresh_rollup(spark, dest) is None
+
+    for name in routes:
+        served = qs[name](spark, sf)
+        assert not routed(served), f"{name} served a stale legacy rollup"
+        assert rows(served) == rows(qs[name](spark, bare)), name

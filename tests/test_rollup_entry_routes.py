@@ -1,8 +1,9 @@
-"""The r10 rollup-sidecar routes for daily_counts_gapfill and
-streaming_window_day: on a layout carrying a fresh `.rollup` sidecar
-each query must (a) read the sidecar and never the events base table,
-and (b) return exactly the fallback plan's rows — bit-identical, since
-cnt/sum_v are associative integer partials."""
+"""The `.rollup`-sidecar entry routes (time_bucket_agg,
+daily_counts_gapfill, streaming_window_day, continuous_rollup_events):
+on a layout carrying a fresh `.rollup` sidecar each query must (a) read
+the sidecar and never the events base table, and (b) return exactly the
+fallback plan's rows — bit-identical, since cnt/sum_v are associative
+integer partials."""
 
 import shutil
 
@@ -14,7 +15,12 @@ from columnar_spark.streaming.rollup import write_rollup_sidecar
 
 SF = "/root/testdata/sf0.001"
 
-QUERIES = ["daily_counts_gapfill", "streaming_window_day"]
+QUERIES = [
+    "daily_counts_gapfill",
+    "streaming_window_day",
+    "time_bucket_agg",
+    "continuous_rollup_events",
+]
 
 
 @pytest.fixture(scope="module")
@@ -80,3 +86,20 @@ def test_stale_sidecar_falls_back(spark, dirs, qname, tmp_path):
     df = fn(spark, str(d))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "struct<bucket_start" not in plan, f"{qname} served a STALE sidecar"
+
+
+def test_routed_build_fires_no_jobs_once_gated(spark, dirs):
+    """The freshness gate's one Spark job (sum(cnt) vs the manifest row
+    count) runs once per sidecar state; every later build of a routed
+    query is metadata-only."""
+    routed_dir, _ = dirs
+    sc = spark.sparkContext
+    for qname in QUERIES:
+        E.queries()[qname](spark, routed_dir)  # first call may check
+        group = f"rollup-build-{qname}"
+        sc.setJobGroup(group, qname)
+        try:
+            E.queries()[qname](spark, routed_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], qname

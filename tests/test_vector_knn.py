@@ -233,8 +233,8 @@ def test_batch_cosine_arrow_kernel_matches_expression_path(spark):
     """The r10 Arrow batch-cosine kernel must be BIT-identical to the
     expression plan it replaced (fold dot + rounded two-phase window),
     including: NULL vectors and ragged dims (NULL distance, which ranks
-    FIRST under asc nulls-first), rounding ties at the 6th decimal, and
-    id tie-breaks."""
+    LAST, so neither is a neighbour of any query), rounding ties at the
+    6th decimal, and id tie-breaks."""
     import random
 
     from pyspark.sql import Window
@@ -278,14 +278,16 @@ def test_batch_cosine_arrow_kernel_matches_expression_path(spark):
         "qid", "vec_id", de.alias("dist"), F.spark_partition_id().alias("__pid")
     )
     wl = Window.partitionBy("qid", "__pid").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
+        F.col("dist").asc_nulls_last(), F.col("vec_id").asc()
     )
     loc = (
         joined.withColumn("__rn", F.row_number().over(wl))
         .filter("__rn <= 6")
         .drop("__rn", "__pid")
     )
-    wg = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
+    wg = Window.partitionBy("qid").orderBy(
+        F.col("dist").asc_nulls_last(), F.col("vec_id").asc()
+    )
     want = (
         loc.withColumn("__rn", F.row_number().over(wg))
         .filter("__rn <= 6")
@@ -295,3 +297,58 @@ def test_batch_cosine_arrow_kernel_matches_expression_path(spark):
     a = sorted(map(tuple, got.collect()))
     b = sorted(map(tuple, want.collect()))
     assert a == b and len(a) == 24
+    assert not {r[1] for r in a} & {400, 401}
+
+
+@pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])
+def test_unroll_gate_branches_same_rows(spark, tmp_path, metric):
+    """Both sides of the dim-unroll size gate (knn._unroll_dim) return
+    identical rows, on a zero-norm row and a NULL vector too, and
+    neither of those is ever a nearest neighbour (their NULL distance
+    ranks last). The byte-threshold conf forces each branch: 0 takes
+    the unrolled chain, a huge value the fold. The corpus is read from
+    parquet so the size estimate is real (an in-memory frame reads
+    Long.MaxValue)."""
+    from columnar_spark.operators.knn import (
+        UNROLL_BYTES_CONF,
+        knn_batch_topk,
+        knn_radius,
+    )
+
+    rows = [
+        (1, [1.0, 0.0, 0.0]),
+        (2, [0.0, 0.0, 0.0]),  # zero norm
+        (3, [0.6, 0.8, 0.0]),
+        (4, None),
+        (5, [0.0, 1.0, 0.5]),
+    ]
+    spark.createDataFrame(rows, "vec_id: long, embedding: array<double>") \
+        .coalesce(1).write.parquet(f"{tmp_path}/corpus")
+    corpus = spark.read.parquet(f"{tmp_path}/corpus")
+    q = [0.5, 0.5, 0.0]
+
+    got = {}
+    try:
+        for thr, unrolled in (("0", True), (str(2**63 - 1), False)):
+            spark.conf.set(UNROLL_BYTES_CONF, thr)
+            top = knn_topk(corpus, "embedding", q, k=2, metric=metric)
+            near = knn_radius(corpus, "embedding", q, radius=0.6, metric=metric)
+            capped = knn_radius(
+                corpus, "embedding", q, radius=0.6, metric=metric, limit=2
+            )
+            for df in (top, near, capped):
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                assert ("zip_with" not in plan) == unrolled, plan
+            got[unrolled] = [
+                sorted(map(tuple, d.collect())) for d in (top, near, capped)
+            ]
+    finally:
+        spark.conf.unset(UNROLL_BYTES_CONF)
+    assert got[True] == got[False]
+    # every metric ranks id 3 first and id 1 second (l2 ties id 1 with the
+    # zero vector at 0.5 and ip ties it with id 5; the id breaks both)
+    assert [r[0] for r in sorted(got[True][0], key=lambda r: r[-1])] == [3, 1]
+    assert got[True][1] and got[True][2]
+    qs = spark.createDataFrame([(0, q)], "qid: long, qvec: array<double>")
+    batch = knn_batch_topk(corpus, "embedding", qs, k=2, metric=metric)
+    assert sorted(r["vec_id"] for r in batch.collect()) == [1, 3]
